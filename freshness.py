@@ -20,9 +20,9 @@ Checks enforced (exit 1 on violation):
     current window) — i.e. nothing oracled can go forever unchecked;
   * the 5 reference-parity pins hold the first 5 slots.
 
-The staleness REPORT is informational: which cohort is front-of-line
-next round is a judgment call recorded in registry.py's _WINDOW
-comment, but the map it starts from should never be hand-derived.
+The staleness REPORT is informational: which cohort moves to the front
+of the window is a judgment call made when registry.py's _WINDOW is
+edited, but the map it starts from should never be hand-derived.
 """
 
 from __future__ import annotations

@@ -125,6 +125,10 @@ def pagerank_copurchase(
     from the 6dp public output instead stays within ~1e-6 but compounds
     per restart in a long chain. A preempted cluster job loses only the
     rounds since its last persisted ranks table, never the whole run.
+
+    The public output is float-order sensitive at the last ulp, so the
+    query registers rows-only; every node's rank is pinned against a
+    numpy reference in tests/test_graph.py.
     """
     edges = copurchase_edges(lineitem).localCheckpoint()
     # degrees is re-read every round by the rank-update join: checkpoint

@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import shuffle_parallelism
+
 KV_SCHEMA = "key string, value string"
 
 MapFunc = Callable[[str, str], Iterable[tuple[str, str]]]
@@ -64,11 +66,8 @@ def resolve_num_partitions(spark, job: "MapReduceJob") -> int:
     platforms set spark.sql.shuffle.partitions to a non-integer)."""
     if job.num_partitions is not None:
         return job.num_partitions
-    raw = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        return int(raw)
-    except ValueError:
-        return spark.sparkContext.defaultParallelism
+    n = shuffle_parallelism(spark)
+    return n if n is not None else spark.sparkContext.defaultParallelism
 
 
 def run_mapreduce(

@@ -586,6 +586,10 @@ def knn_ivf_pq(
     Training (centroids + codebooks) runs on the same bounded
     deterministic sample as knn_ivf; everything downstream is
     Arrow-batched, no data-sized driver transfer anywhere.
+
+    Quantizer internals are not SQL-expressible, so the query registers
+    rows-only; recall is pinned against knn_bruteforce in
+    tests/test_dedup_similarity.py.
     """
     e = _as_double(embeddings)
     sample = _collect_sample(e, sample_size)
@@ -708,6 +712,8 @@ def knn_ivf_pq_persisted(
 
     Driver transfers stay bounded: centroids (n_lists), codebooks
     (m × n_codes), and the query-probe rows (n_queries × n_probe).
+
+    Rows-only, like knn_ivf_pq.
     """
     from ..sinks.bucketed import read_bucketed
     from ..sources.tables import load_table

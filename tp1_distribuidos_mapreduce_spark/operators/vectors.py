@@ -76,6 +76,9 @@ def label_centroid_cosine(embeddings: DataFrame) -> DataFrame:
     the shared Catalyst fold. A tight avg/min separates well-clustered
     labels from polluted ones — the label-noise smoke test run before
     trusting classifier training data.
+
+    Oracle: the centroids rebuilt in SQL, scored with DuckDB's
+    list_cosine_similarity.
     """
     e = _as_double(embeddings)
     cents = label_centroids(embeddings)
@@ -190,7 +193,11 @@ def embedding_pca(
     """Project every embedding onto the corpus's top principal
     components: (vec_id, label, pc1, pc2). The projection is a JVM-side
     dot against component literal arrays — the Python boundary is
-    crossed only by the bounded Gram partials."""
+    crossed only by the bounded Gram partials.
+
+    Float-order sensitive at the last ulp, so the query registers
+    rows-only; the projection is pinned against numpy in
+    tests/test_vectors.py."""
     comp, mu = pca_components(embeddings, n_components)
     e = _as_double(embeddings)
     cols = [F.col("vec_id"), F.col("label")]
@@ -228,6 +235,9 @@ def kmeans_clusters(
     The cast base vectors are materialized ONCE (localCheckpoint) before
     the loop — the canonical Lloyd's shape of caching the working set
     across iterations (at cluster scale, ``persist(MEMORY_AND_DISK)``).
+
+    Rows-only; agreement with a numpy reference is pinned in
+    tests/test_vectors.py.
     """
     import pandas as pd
 

@@ -323,7 +323,9 @@ def cms_merge_proof(
     exactly one cell per depth row, so total_count = depth × the exact
     corpus token count (the differential's reference). At 100 TB this
     is how per-slice frequency sketches fold: depth×width bounded cell
-    frames summed per cell, never the vocabulary crossing the wire."""
+    frames summed per cell, never the vocabulary crossing the wire.
+
+    Rows-only; the flag is pinned in tests/test_approx.py."""
     from ..functions.tokenize import words_from
 
     by_source = (
@@ -563,7 +565,11 @@ def hll_merge_proof(events: DataFrame) -> DataFrame:
     (n_sketches_merged, approx_users, merge_matches_onebuild); the flag
     requires the register ARRAYS bit-identical, not just the estimates.
     At 100 TB this is exactly how the sketch deploys: per-slice builds
-    folded by max, one 256-int array per group crossing the wire."""
+    folded by max, one 256-int array per group crossing the wire.
+
+    Rows-only; the flag is pinned in tests/test_approx.py, and
+    differential.py envelopes the estimate against the exact
+    COUNT(DISTINCT)."""
     merged = hll_type_sketches(events).agg(
         F.count(F.lit(1)).cast("long").alias("n_sketches_merged"),
         F.aggregate(F.collect_list("regs"), _hll_zero(), _hll_zipmax).alias("regs"),
@@ -759,6 +765,8 @@ def kmv_event_user_overlap(events: DataFrame) -> DataFrame:
     of a multiset equals bottom-K of its support. The hash is the
     JVM-side md5 prefix (conv(substr(md5, 1, 15))) — deterministic,
     no Python anywhere.
+
+    Rows-only (sketch); the exact twin carries the oracle.
     """
     return overlap_from_kmv_sketches(kmv_type_sketches(events))
 
@@ -862,7 +870,11 @@ def kmv_merge_proof(events: DataFrame) -> DataFrame:
     flag requires the hash ARRAYS bit-identical, not just the
     estimates. This is the sketch's production shape at 100 TB:
     per-slice bottom-Ks folded by union-truncate, one ≤K-element array
-    per group crossing the wire."""
+    per group crossing the wire.
+
+    Rows-only; the flag is pinned in tests/test_approx.py, and
+    differential.py envelopes the estimate against the exact
+    COUNT(DISTINCT)."""
     merged = kmv_type_sketches(events).agg(
         F.count(F.lit(1)).cast("long").alias("n_sketches_merged"),
         F.slice(
@@ -984,7 +996,9 @@ def ddsketch_event_quantiles(events: DataFrame) -> DataFrame:
     requested rank, any data size — pinned against the exact sorted
     element in tests/test_approx.py (exact twins with driver rows over
     the same cent-cell machinery: winsorized_mean_price /
-    iqr_price_fences)."""
+    iqr_price_fences).
+
+    Rows-only (sketch)."""
     return quantiles_from_dd_buckets(dd_value_buckets(events))
 
 
@@ -1084,7 +1098,9 @@ def ddsketch_merge_proof(events: DataFrame) -> DataFrame:
     one extra scan to keep the proof independent), so equality proves
     the merge law, not plan reuse. At 100 TB this is exactly how the
     sketch deploys: per-partition/per-day builds folded by addition,
-    one ≤ ~800-row frame per group crossing the wire."""
+    one ≤ ~800-row frame per group crossing the wire.
+
+    Rows-only."""
     merged = (
         dd_value_buckets_by_type(events)
         .groupBy("idx")

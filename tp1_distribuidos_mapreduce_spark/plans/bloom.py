@@ -91,7 +91,9 @@ def bloom_merge_proof(events: DataFrame) -> DataFrame:
     occupancy-envelope reference checks against the exact distinct-key
     count. At 100 TB this is how join-pruning filters are built:
     per-slice word tables folded by OR, ≤ 4,096 words per group
-    crossing the wire."""
+    crossing the wire.
+
+    Rows-only; the flag is pinned in tests/test_approx.py."""
     keyed = events.select("event_type", "user_id")
     # (groups × 4096)-bounded checkpoint: the OR-merge AND the
     # sketch-count tally both consume the typed word table, and

@@ -39,6 +39,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import shuffle_parallelism
+
 # Anchor for the day index: inside the fixture's date range so the
 # centered x values (and thus Σx² and the slope denominator) stay far
 # from BIGINT limits even at a 100 TB row count. Any fixed date works —
@@ -1365,26 +1367,26 @@ def theil_sen_revenue_trend(orders: DataFrame) -> DataFrame:
         )
         .groupBy("x")
         .agg(F.sum("cents").alias("y"))
-        # Pin the checkpointed frame's partition count to the session's
-        # shuffle parallelism (r22, guide §2.5): AQE rightly coalesces
-        # the ~2.4k-row aggregate to ONE post-shuffle partition, but this
-        # frame is the STREAM side of the pairwise-slope nested-loop
-        # join, so every median-selection pass over the ~2.9M-pair frame
-        # was running as a single task (measured 0.55-0.6s per pass × 3
-        # passes at sf0.1). An explicit-count hash repartition is exempt
-        # from AQE coalescing, so the O(days²) slope work fans out
-        # across the cores; the extra exchange moves only the
-        # calendar-bounded rows, once, at build. Selection is
-        # partitioning-invariant (the k-th element of the sorted
-        # multiset — see _selected_lower_median), verified hash-
-        # identical vs the oracle.
-        .repartition(default_parallelism(), "x")
-        # checkpoint the calendar-bounded collapse (~2.4k rows): the
-        # median selection's three passes then rebuild the pair frame
-        # from this frame, and the FACT table is scanned exactly once —
-        # the pass that dominates at 100 TB.
-        .localCheckpoint()
     )
+    # Pin the checkpointed frame's partition count to the session's
+    # shuffle parallelism: AQE rightly coalesces the ~2.4k-row aggregate
+    # to ONE post-shuffle partition, but this frame is the STREAM side of
+    # the pairwise-slope nested-loop join, so every median-selection pass
+    # over the ~2.9M-pair frame was running as a single task (measured
+    # 0.55-0.6s per pass × 3 passes at sf0.1). An explicit-count hash
+    # repartition is exempt from AQE coalescing, so the O(days²) slope
+    # work fans out across the cores; the extra exchange moves only the
+    # calendar-bounded rows, once, at build. Selection is
+    # partitioning-invariant (the k-th element of the sorted multiset —
+    # see _selected_lower_median), verified hash-identical vs the oracle.
+    n_parts = shuffle_parallelism(orders.sparkSession)
+    if n_parts is not None:
+        daily = daily.repartition(n_parts, "x")
+    # checkpoint the calendar-bounded collapse (~2.4k rows): the median
+    # selection's three passes then rebuild the pair frame from this
+    # frame, and the FACT table is scanned exactly once — the pass that
+    # dominates at 100 TB.
+    daily = daily.localCheckpoint()
     d1 = daily.select(F.col("x").alias("x1"), F.col("y").alias("y1"))
     d2 = daily.select(F.col("x").alias("x2"), F.col("y").alias("y2"))
     slopes = (

@@ -100,6 +100,15 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def shuffle_parallelism(spark: SparkSession) -> int | None:
+    """The session's spark.sql.shuffle.partitions as an int, or None when
+    it is not one (managed platforms set it to 'auto')."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return None
+
+
 def widen_to_shuffle_parallelism(df):
     """Repartition a narrow CPU-bound input up to the session's shuffle
     parallelism — the measured fix for single-split fixture parquet
@@ -110,10 +119,8 @@ def widen_to_shuffle_parallelism(df):
     Shared by every widen site (decontam, jaccard, minhash) so the
     policy can't drift between copies, and 'auto'-safe: managed
     platforms set spark.sql.shuffle.partitions to a non-integer."""
-    raw = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    try:
-        target = int(raw)
-    except ValueError:
+    target = shuffle_parallelism(df.sparkSession)
+    if target is None:
         return df
     # Partition-count probe (r22, VERDICT r21 #7): df.rdd wraps the
     # whole plan in a Python-pickle conversion before asking for the
