@@ -10,27 +10,37 @@ Here the same contract is a pair of Python callables executed with Arrow
 batching; everything between them — shuffle, grouping, barriers, retries,
 the whole of the reference's cmd/ tree — is Spark.
 
-Execution shape (the reference's exact 2-stage plan, §3.4):
+Execution shape (the reference's exact 2-stage plan, §3.4), one Python pass
+over Arrow batches on each side of the shuffle:
 
-    mapInPandas(map)  →  repartition(R, key)  →  applyInPandas(reduce)
+    mapInPandas(map [+ combine])
+      →  repartition(R, key) . sortWithinPartitions(key)
+      →  mapInPandas(fold each run of equal keys through reduce)
 
 Scale notes:
 - Map runs per Arrow batch, never whole-file-in-memory like worker.go:42-47.
-- ``applyInPandas`` materializes one group per executor — the same limit as
-  the reference's map[string][]string (worker.go:194-198). That is inherent
-  to the holistic ``Reduce(key, values)`` contract; jobs whose reduce is
-  algebraic should use the DataFrame API directly and get partial
-  aggregation for free (see operators/wordcount.py).
-- When ``combine_fn`` is provided (an associative pre-reduce), we run it
-  map-side via applyInPandas on the *input* partitioning before the
-  shuffle — the combiner the reference lacks (SURVEY.md §4.2) — so shuffle
-  volume drops from O(records) to O(distinct keys per partition).
+- The reduce side holds one Arrow batch plus one key's values — the same
+  limit as the reference's map[string][]string (worker.go:194-198). The
+  values bound is inherent to the holistic ``Reduce(key, values)``
+  contract; jobs whose reduce is algebraic should use the DataFrame API
+  directly and get partial aggregation for free (see
+  operators/wordcount.py).
+- When ``combine_fn`` is provided (an associative pre-reduce), the map pass
+  also groups each batch's output by key and emits one combined row per
+  key before the shuffle — the combiner the reference lacks (SURVEY.md
+  §4.2) — so shuffle volume drops from O(records) to O(distinct keys per
+  batch).
+- The reduce side is not ``groupBy().agg(collect_list(value))``:
+  ``collect_list`` drops null values, so a reducer owed ``[None, None]``
+  would see ``[]``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass
+from itertools import groupby
+from operator import itemgetter
 
 import pandas as pd
 
@@ -85,50 +95,55 @@ def run_mapreduce(
 
     def run_map(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         for pdf in batches:
-            keys: list[str] = []
-            vals: list[str] = []
-            for doc, text in zip(pdf[doc_col], pdf[text_col]):
-                for k, v in map_fn(doc, text):
-                    keys.append(k)
-                    vals.append(v)
-            yield pd.DataFrame({"key": keys, "value": vals})
+            pairs = (
+                kv
+                for doc, text in zip(pdf[doc_col].tolist(), pdf[text_col].tolist())
+                for kv in map_fn(doc, text)
+            )
+            if combine_fn is None:
+                yield pd.DataFrame(list(pairs), columns=["key", "value"])
+                continue
+            # Map-side combine, genuinely narrow: group this Arrow batch's
+            # map output in a dict, in the same pass. (A groupBy(partition_id,
+            # key) formulation would hash-exchange the uncombined stream —
+            # the exact cost a combiner exists to avoid.) A None key is an
+            # ordinary dict key, so null keys reach the reducer as they do
+            # without a combiner: an optimization must not change the
+            # result set.
+            groups: dict[str, list[str]] = {}
+            for k, v in pairs:
+                groups.setdefault(k, []).append(v)
+            yield pd.DataFrame(
+                [(k, combine_fn(k, vs)) for k, vs in groups.items()],
+                columns=["key", "value"],
+            )
 
-    def make_reducer(fn: ReduceFunc) -> Callable[[pd.DataFrame], pd.DataFrame]:
-        def run_reduce(pdf: pd.DataFrame) -> pd.DataFrame:
-            key = pdf["key"].iloc[0]
-            return pd.DataFrame({"key": [key], "value": [fn(key, list(pdf["value"]))]})
-
-        return run_reduce
+    def run_reduce(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+        # Input is sorted by key, so each key is one run of rows that may
+        # span Arrow batches: the run still open at the end of a batch
+        # carries into the next, and the last run is emitted after the
+        # final batch. groupby compares with ==, so None equals None.
+        key, vals = None, None  # the open run; vals is None before the first
+        for pdf in batches:
+            rows = []
+            for k, run in groupby(zip(pdf["key"].tolist(), pdf["value"].tolist()), itemgetter(0)):
+                if vals is not None and k == key:
+                    vals.extend(v for _, v in run)
+                    continue
+                if vals is not None:
+                    rows.append((key, reduce_fn(key, vals)))
+                key, vals = k, [v for _, v in run]
+            if rows:
+                yield pd.DataFrame(rows, columns=["key", "value"])
+        if vals is not None:
+            yield pd.DataFrame([(key, reduce_fn(key, vals))], columns=["key", "value"])
 
     kv = corpus.select(doc_col, text_col).mapInPandas(run_map, schema=KV_SCHEMA)
-
-    if combine_fn is not None:
-        # Map-side combine, genuinely narrow: pandas-groupby inside each
-        # Arrow batch via mapInPandas. (A groupBy(partition_id, key).
-        # applyInPandas formulation still hash-exchanges on the group key —
-        # an extra full shuffle of the uncombined stream, the exact cost a
-        # combiner exists to avoid.)
-        def run_combine(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-            for pdf in batches:
-                rows = [
-                    (k, combine_fn(k, list(vs)))
-                    # dropna=False: pandas' default silently discards
-                    # null keys, which Spark's reduce-side groupBy keeps —
-                    # an optimization-only combiner must not change the
-                    # result set.
-                    for k, vs in pdf.groupby("key", sort=False, dropna=False)[
-                        "value"
-                    ]
-                ]
-                yield pd.DataFrame(rows, columns=["key", "value"])
-
-        kv = kv.mapInPandas(run_combine, schema=KV_SCHEMA)
-
     R = resolve_num_partitions(corpus.sparkSession, job)
     reduced = (
         kv.repartition(R, "key")
-        .groupBy("key")
-        .applyInPandas(make_reducer(reduce_fn), schema=KV_SCHEMA)
+        .sortWithinPartitions("key")
+        .mapInPandas(run_reduce, schema=KV_SCHEMA)
     )
     return reduced.orderBy("key")
 
